@@ -17,6 +17,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .keyindex import string_frame
+
 PHASE_UNPACKED = "Unpacked"  # main.go:132 readiness predicate value
 
 
@@ -49,12 +51,15 @@ class CatalogRegistry:
         return list(self._entries.values())
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        rows = [
-            (e.name, e.phase, e.last_modified, e.source)
-            for e in self._entries.values()
-        ]
-        return spark.createDataFrame(
-            rows, "name string, phase string, last_modified string, source string"
+        entries = self._entries.values()
+        return string_frame(
+            spark,
+            {
+                "name": [e.name for e in entries],
+                "phase": [e.phase for e in entries],
+                "last_modified": [e.last_modified for e in entries],
+                "source": [e.source for e in entries],
+            },
         )
 
     # -- S2: point lookup by primary key --------------------------------

@@ -10,6 +10,10 @@ path construction.
 
 All listing results are sorted ascending like the reference
 (sort.Strings — main.go:155,197,238).
+
+``ConsoleEngine`` serves Q1-Q3, and the 404s of Q4/Q5, from the
+snapshot's ``keyindex.KeyIndex`` instead; these functions are the
+reference its answers are tested against, and serve ``navigation``.
 """
 
 from __future__ import annotations
@@ -42,8 +46,11 @@ def list_packages(metas: DataFrame) -> DataFrame:
     """Q1 (main.go:124-164): distinct level-1 partition keys, sorted.
     ``SELECT DISTINCT package FROM metas ORDER BY package``.
 
-    Over the snapshot store this is a partition listing — Catalyst
-    answers it from partition metadata without scanning data files.
+    Over the snapshot store this plan still scans the data files (a
+    ``FileScan`` of every partition feeds the distinct). The serving
+    facade does not run it: ``ConsoleEngine.list_packages`` answers from
+    the snapshot's ``KeyIndex`` with zero Spark jobs, which
+    ``test_engine_304_path_launches_no_spark_job`` pins by job count.
     """
     return metas.select("package").distinct().orderBy("package")
 

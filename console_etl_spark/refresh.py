@@ -9,9 +9,13 @@ Re-expresses the reference's caching client (S3 + C1,
   the existing snapshot with *zero Spark jobs launched* — the 304 analog.
 - **LRU + TTL** (cache.go:26-28): a bounded map of catalog → snapshot,
   default capacity 100 entries / 24 h staleness bound, both configurable
-  (the reference hardcodes them). Eviction unpersists any cached
-  DataFrame and drops the snapshot directory — the ``os.RemoveAll``
-  eviction side effect (cache.go:30-33).
+  (the reference hardcodes them). Eviction drops the snapshot directory —
+  the ``os.RemoveAll`` eviction side effect (cache.go:30-33).
+- **What a slot holds**: the snapshot's resolved, uncached DataFrame
+  (partition discovery ran once, at admission; point reads prune from
+  it) and its ``KeyIndex`` (listings and missing keys need no Spark job).
+  Nothing goes into Spark's block store, and a listing is a driver-side
+  table, so one a caller already holds survives the slot's eviction.
 
 Unlike the reference, refresh is race-safe and idempotent: re-publishing
 an unchanged version is a no-op (the reference would fail the symlink
@@ -31,6 +35,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .keyindex import KeyIndex
 from .store import SnapshotInfo, SnapshotStore
 
 DEFAULT_CAPACITY = 100  # cache.go:26
@@ -40,7 +45,8 @@ DEFAULT_TTL_SECONDS = 24 * 3600.0  # cache.go:28
 @dataclass
 class _CacheSlot:
     info: SnapshotInfo
-    df: DataFrame | None
+    df: DataFrame
+    index: KeyIndex
     cached_at: float
 
 
@@ -74,7 +80,6 @@ class FreshnessManager:
         catalog: str,
         source_version: Callable[[], str],
         build: Callable[[SparkSession], DataFrame],
-        cache_df: bool = True,
     ) -> DataFrame:
         """Serve ``catalog``, re-ingesting only if the source changed.
 
@@ -86,10 +91,12 @@ class FreshnessManager:
         if slot is not None and now - slot.cached_at <= self.ttl:
             version = source_version()
             if version == slot.info.version:
-                # 304 path: serve cached snapshot, zero recompute.
+                # 304 path: serve the held snapshot, zero recompute. With
+                # replicas every read resolves through the balancer, so
+                # failover stays live.
                 self._lru.move_to_end(catalog)
                 self.hit_count += 1
-                return slot.df if slot.df is not None else self._read(spark, catalog)
+                return slot.df if self.balancer is None else self._read(spark, catalog)
 
         version = source_version()
         current = self.store.current(catalog)
@@ -99,10 +106,12 @@ class FreshnessManager:
             info = self.store.publish(build(spark), catalog, version)
             self.refresh_count += 1
         df = self._read(spark, catalog)
-        if cache_df:
-            df = df.cache()
-        self._admit(catalog, _CacheSlot(info, df if cache_df else None, now))
+        self._admit(catalog, _CacheSlot(info, df, KeyIndex.of(df), now))
         return df
+
+    def index(self, catalog: str) -> KeyIndex:
+        """The key index of the snapshot ``get`` last served for ``catalog``."""
+        return self._lru[catalog].index
 
     def _read(self, spark: SparkSession, catalog: str) -> DataFrame:
         if self.balancer is not None:
@@ -111,32 +120,23 @@ class FreshnessManager:
 
     # -- LRU/TTL plumbing ------------------------------------------------
     def _admit(self, catalog: str, slot: _CacheSlot) -> None:
-        if catalog in self._lru:
-            old = self._lru.pop(catalog)
-            if old.df is not None and old.df is not slot.df:
-                old.df.unpersist()
+        self._lru.pop(catalog, None)
         self._lru[catalog] = slot
         while len(self._lru) > self.capacity:
-            victim, vslot = self._lru.popitem(last=False)
-            self._evict(victim, vslot)
-
-    def _evict(self, catalog: str, slot: _CacheSlot) -> None:
-        if slot.df is not None:
-            slot.df.unpersist()
-        self.store.drop(catalog)
+            victim, _ = self._lru.popitem(last=False)
+            self.store.drop(victim)
 
     def expire(self) -> list[str]:
         """Drop all slots older than the TTL (staleness bound)."""
         now = self.clock()
         victims = [c for c, s in self._lru.items() if now - s.cached_at > self.ttl]
         for c in victims:
-            self._evict(c, self._lru.pop(c))
+            self.invalidate(c)
         return victims
 
     def invalidate(self, catalog: str) -> None:
-        slot = self._lru.pop(catalog, None)
-        if slot is not None:
-            self._evict(catalog, slot)
+        if self._lru.pop(catalog, None) is not None:
+            self.store.drop(catalog)
 
 
 # --------------------------------------------------------------------------

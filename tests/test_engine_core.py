@@ -360,7 +360,7 @@ def test_lru_eviction_drops_snapshot(spark, store, catalog_metas):
     df = shred_metas(catalog_metas.drop("catalog")).limit(20)
     mgr = FreshnessManager(store, capacity=2)
     for cat in ["a", "b", "c"]:
-        mgr.get(spark, cat, lambda: "v1", lambda s: df, cache_df=False)
+        mgr.get(spark, cat, lambda: "v1", lambda s: df)
     assert store.current("a") is None  # evicted (os.RemoveAll analog)
     assert store.current("b") is not None
     assert store.current("c") is not None
@@ -622,6 +622,155 @@ def test_engine_facade_end_to_end(spark, store, catalog_metas):
     eng.registry.set_phase("cat", "Pending")
     with _pytest.raises(CatalogNotReadyError):
         eng.list_packages("cat")
+
+
+# --------------------------------------------------------------------------
+# Key index: the facade's listings and 404s without Spark jobs
+# --------------------------------------------------------------------------
+
+ENVELOPE_DDL = "package string, schema string, name string, blob string"
+
+
+def _doc(schema, package, name, icon=None, **extra):
+    doc = {"schema": schema, "package": package, "name": name, **extra}
+    if icon is not None:
+        doc["icon"] = icon
+    return json.dumps(doc)
+
+
+def _key_index_rows() -> list[tuple]:
+    """A snapshot with every key shape the index must reproduce: the
+    ``__global`` bucket (with a null name), a package without an
+    ``olm.package`` doc, an icon-less package, duplicate names (with
+    different blobs), and names whose binary order differs from their
+    case-folded order."""
+    import base64
+
+    svg = {"base64data": base64.b64encode(b"<svg/>").decode(), "mediatype": "image/svg+xml"}
+    return [
+        ("__global", "olm.bundle", "orphan-b", _doc("olm.bundle", "", "orphan-b")),
+        ("__global", "olm.bundle", "orphan-a", _doc("olm.bundle", "", "orphan-a")),
+        ("__global", "olm.bundle", None, json.dumps({"schema": "olm.bundle"})),
+        ("alpha", "olm.package", "alpha", _doc("olm.package", "", "alpha", icon=svg)),
+        ("alpha", "olm.channel", "stable", _doc("olm.channel", "alpha", "stable")),
+        ("alpha", "olm.bundle", "alpha.v2", _doc("olm.bundle", "alpha", "alpha.v2")),
+        ("alpha", "olm.bundle", "alpha.v1", _doc("olm.bundle", "alpha", "alpha.v1", rev=1)),
+        ("alpha", "olm.bundle", "alpha.v1", _doc("olm.bundle", "alpha", "alpha.v1", rev=2)),
+        ("alpha", "olm.bundle", "Zeta.v0", _doc("olm.bundle", "alpha", "Zeta.v0")),
+        ("alpha", "olm.bundle", "\u00e9clair", _doc("olm.bundle", "alpha", "\u00e9clair")),
+        ("beta", "olm.channel", "fast", _doc("olm.channel", "beta", "fast")),
+        ("beta", "olm.bundle", "beta.v1", _doc("olm.bundle", "beta", "beta.v1")),
+        ("gamma", "olm.package", "gamma", _doc("olm.package", "", "gamma")),
+        ("gamma", "olm.channel", "stable", _doc("olm.channel", "gamma", "stable")),
+        ("Gamma", "olm.package", "Gamma", _doc("olm.package", "", "Gamma", icon=svg)),
+    ]
+
+
+@pytest.mark.parametrize("snapshot", ["mixed", "empty"])
+def test_key_index_answers_equal_queries(spark, store, snapshot):
+    """Every facade listing and point read equals the ``queries``
+    DataFrame function over ``store.read`` of the same snapshot — in
+    order and multiplicity, for present and missing keys alike."""
+    from console_etl_spark import queries as nav
+    from console_etl_spark.engine import ConsoleEngine
+
+    rows = _key_index_rows() if snapshot == "mixed" else []
+    metas = spark.createDataFrame(rows, ENVELOPE_DDL)
+    eng = ConsoleEngine(spark, store)
+    eng.register_catalog(CatalogEntry("cat"), lambda: "v1", lambda s: metas)
+
+    def same(got, want):
+        assert got.dtypes == want.dtypes
+        assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+
+    packages_df = eng.list_packages("cat")  # the one ingest and publish
+    ref = store.read(spark, "cat")
+    same(packages_df, nav.list_packages(ref))
+    packages = sorted({r[0] for r in rows}) + ["no-such-package"]
+    schemas = sorted({r[1] for r in rows}) + ["olm.package", "no-such-schema"]
+    for p in packages:
+        same(eng.list_schemas("cat", p), nav.list_schemas(ref, p))
+        icon = nav.get_package_icon(ref, p).take(1)
+        assert eng.get_icon("cat", p) == (tuple(icon[0]) if icon else None), p
+        for s in schemas:
+            same(eng.list_objects("cat", p, s), nav.list_objects(ref, p, s))
+    probes = [(p, s, n) for p, s, n, _ in rows if n is not None] + [
+        ("no-such-package", "olm.bundle", "alpha.v1"),
+        ("alpha", "no-such-schema", "alpha.v1"),
+        ("alpha", "olm.bundle", "no-such-name"),
+    ]
+    for key in probes:
+        blob = nav.get_object(ref, *key).take(1)
+        assert eng.get_object("cat", *key) == (blob[0]["blob"] if blob else None), key
+
+
+def _n_jobs_settled(spark) -> int:
+    """Jobs submitted this session, once the listener bus has delivered
+    every event already posted."""
+    sc = spark._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore().jobsList(None).size()
+
+
+def test_engine_304_path_launches_no_spark_job(spark, store, catalog_metas):
+    """On the 304 path the registry listing, the three key listings
+    (collected) and point reads of missing keys are answered on the
+    driver: the session's job count does not move."""
+    from console_etl_spark.engine import ConsoleEngine
+
+    metas = shred_metas(catalog_metas.drop("catalog"))
+    eng = ConsoleEngine(spark, store)
+    eng.register_catalog(CatalogEntry("cat"), lambda: "v1", lambda s: metas)
+    pkg = eng.list_packages("cat").collect()[0]["package"]  # the one ingest
+    schema = eng.list_schemas("cat", pkg).collect()[0]["schema"]
+    assert eng.list_objects("cat", pkg, schema).collect()
+
+    before = _n_jobs_settled(spark)
+    hits = eng.refresh.hit_count
+    assert [r["name"] for r in eng.list_catalogs().collect()] == ["cat"]
+    assert eng.list_packages("cat").collect()
+    assert eng.list_schemas("cat", pkg).collect()
+    assert eng.list_objects("cat", pkg, schema).collect()
+    assert eng.get_object("cat", pkg, schema, "no-such-object") is None
+    assert eng.get_object("cat", "no-such-package", schema, "x") is None
+    assert eng.get_icon("cat", "no-such-package") is None
+    assert _n_jobs_settled(spark) == before
+    assert eng.refresh.hit_count == hits + 6
+
+
+def test_listings_survive_eviction_mid_read(spark, store, catalog_metas):
+    """A listing taken before its snapshot is evicted (LRU) or
+    invalidated still collects afterwards, with the same rows."""
+    from console_etl_spark.engine import ConsoleEngine
+
+    metas = shred_metas(catalog_metas.drop("catalog"))
+    eng = ConsoleEngine(spark, store, capacity=1)
+    for cat in ("a", "b"):
+        eng.register_catalog(CatalogEntry(cat), lambda: "v1", lambda s: metas)
+
+    def take_listings(cat):
+        """The three listings, taken but not yet collected, and their rows
+        collected from a second set of the same calls."""
+        pkg = eng.list_packages(cat).collect()[0]["package"]
+        schema = eng.list_schemas(cat, pkg).collect()[0]["schema"]
+
+        def listings():
+            return [
+                eng.list_packages(cat),
+                eng.list_schemas(cat, pkg),
+                eng.list_objects(cat, pkg, schema),
+            ]
+
+        return listings(), [df.collect() for df in listings()]
+
+    a_dfs, a_rows = take_listings("a")
+    b_dfs, b_rows = take_listings("b")  # capacity 1: admitting b evicts a
+    assert store.current("a") is None
+    eng.refresh.invalidate("b")
+    assert store.current("b") is None
+    assert [df.collect() for df in a_dfs] == a_rows
+    assert [df.collect() for df in b_dfs] == b_rows
+    assert all(a_rows) and all(b_rows)
 
 
 # --------------------------------------------------------------------------
@@ -1407,12 +1556,12 @@ def test_freshness_manager_reads_through_replica_balancer(spark, tmp_path, catal
     fm = FreshnessManager(primary, balancer=bal)
 
     n = df.count()
-    got = fm.get(spark, "cat", lambda: "v1", lambda s: df, cache_df=False)
+    got = fm.get(spark, "cat", lambda: "v1", lambda s: df)
     assert got.count() == n
     # mirror dies: subsequent gets keep serving via failover
     shutil.rmtree(mirror_root)
     for _ in range(3):
-        assert fm.get(spark, "cat", lambda: "v1", lambda s: df, cache_df=False).count() == n
+        assert fm.get(spark, "cat", lambda: "v1", lambda s: df).count() == n
     assert fm.hit_count >= 3  # all 304-path serves
 
 
