@@ -17,8 +17,11 @@ snapshot:
 	git add -f PLAN_AUDIT.json 2>/dev/null || true
 	git diff --cached --quiet || git commit -m "snapshot: driver bench/correctness artifacts"
 
+# The Tier-1 suite exactly as ROADMAP.md states it: same env, timeout
+# and flags, so `make test` passes or fails as the gate does.
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

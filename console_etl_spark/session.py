@@ -5,13 +5,30 @@ cluster: AQE for runtime re-planning (skew joins, partition coalescing),
 UTC session timezone (oracle comparability), Arrow for the Pandas-UDF slow
 path, and shuffle partitions sized to the parallelism at hand rather than
 the 200 default.
+
+The generated-class cache is sized to hold a whole pass of the registry:
+Spark's default (``spark.sql.codegen.cache.maxEntries`` = 100) is below
+the working set, so every repeated query recompiled every class it uses.
+Measured at sf0.001 on a 4-CPU host, one pass of the 119 ``bench.py``
+queries compiles 1,887 distinct classes and the frozen core 30 ~440; at
+the default a warm pass of the core 30 still compiled ~475, with this
+cache 2-20 (AQE's stage numbering makes a few class sources differ).
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries in Spark's generated-class cache: a whole bench.py pass
+# (1,887 classes, module docstring) with room to spare. Static conf, so
+# it only takes effect when get_spark starts the session.
+CODEGEN_CACHE_ENTRIES = 4096
+
+# Footer key under which Spark's Parquet writer stores its row schema.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def get_spark(
@@ -68,6 +85,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_SPLIT_MB", "16") + "m",
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     # Only force a master when none is configured (i.e. not under spark-submit).
@@ -80,8 +98,118 @@ def get_spark(
     return spark
 
 
+def _first_data_file(path: str) -> str | None:
+    """The file Spark's schema inference reads when it does not merge
+    schemas: ``path`` itself, or the first data file under the directory
+    ``path``. Names starting with ``_`` or ``.`` are metadata, not data."""
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
+def _spark_readable(at, nanos_as_long: bool):
+    """``at`` with TIMESTAMP(NANOS) as int64, as ``nanosAsLong`` reads it.
+
+    Raises TypeError where Spark does not read what ``from_arrow_type``
+    gives: nanos without ``nanosAsLong`` (Spark refuses them), and time,
+    duration and null columns."""
+    import pyarrow as pa
+    import pyarrow.types as pat
+
+    if pat.is_timestamp(at) and at.unit == "ns":
+        if not nanos_as_long:
+            raise TypeError(at)
+        return pa.int64()
+    if pat.is_time(at) or pat.is_duration(at) or pat.is_null(at):
+        raise TypeError(at)
+    if pat.is_list(at) or pat.is_large_list(at) or pat.is_fixed_size_list(at):
+        return pa.list_(at.value_field.with_type(
+            _spark_readable(at.value_type, nanos_as_long)))
+    if pat.is_map(at):
+        return pa.map_(
+            _spark_readable(at.key_type, nanos_as_long),
+            at.item_field.with_type(_spark_readable(at.item_type, nanos_as_long)),
+        )
+    if pat.is_struct(at):
+        return pa.struct([
+            f.with_type(_spark_readable(f.type, nanos_as_long)) for f in at
+        ])
+    return at
+
+
+def footer_schema(spark: SparkSession, path: str):
+    """The schema ``spark.read.parquet(path)`` would infer, read from the
+    Parquet footer on the driver, or None where this cannot tell.
+
+    Spark infers a Parquet schema with a job that reads one footer; this
+    reads the same footer with pyarrow and launches none. Without schema
+    merging (the session default) Spark reads one file: ``path`` itself
+    or the first data file of the directory.
+
+    - A footer written by Spark carries Spark's own schema under
+      ``org.apache.spark.sql.parquet.row.metadata``; Spark reads that one
+      as-is, and so does this.
+    - Any other footer is mapped from its Arrow schema as Spark maps the
+      Parquet types: TIMESTAMP(NANOS) to bigint (``nanosAsLong``), INT96
+      to timestamp, a timestamp not adjusted to UTC to timestamp_ntz
+      (``inferTimestampNTZ``).
+
+    None means Spark should infer: no local data file, a nested INT96
+    column, or a type the mapping does not cover (unsigned integers,
+    time, ...). Nullability is left as the footer has it: Spark makes
+    every column nullable on read, declared schema or not.
+    """
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    data_file = _first_data_file(path)
+    if data_file is None:
+        return None
+    pf = pq.ParquetFile(data_file)
+    row_metadata = (pf.metadata.metadata or {}).get(_SPARK_ROW_METADATA)
+    if row_metadata is not None:
+        return StructType.fromJson(json.loads(row_metadata))
+    int96 = {
+        pf.schema.column(i).path
+        for i in range(pf.metadata.num_columns)
+        if pf.schema.column(i).physical_type == "INT96"
+    }
+    if any("." in p for p in int96):
+        return None
+    conf = spark.conf
+    nanos_as_long = conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
+    prefer_ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+    fields = []
+    for f in pf.schema_arrow:
+        if f.name in int96:
+            dtype = TimestampType()
+        else:
+            try:
+                dtype = from_arrow_type(_spark_readable(f.type, nanos_as_long), prefer_ntz)
+            except TypeError:  # PySparkTypeError too: an unmapped type
+                return None
+        fields.append(StructField(f.name, dtype, f.nullable))
+    return StructType(fields)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one fixture table (see TESTDATA.md).
+
+    The schema comes from the Parquet footer (``footer_schema``), not
+    from Spark's inference: inferring it runs a Spark job on every call,
+    ~0.15 s warm, and query builders call this once per table they
+    read. The footer gives the schema Spark would infer, so plans and
+    results are unchanged; a footer written by Spark is read by the
+    schema Spark stored in it. This is not a declared table schema:
+    tests write partial tables (fewer columns) and Spark-written
+    directories under fixture names, and a fixed schema would read
+    nulls for them.
 
     The fixture's ``events.ts`` column has shipped under two different
     parquet physical types across generations, and the engine accepts
@@ -108,7 +236,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     # any non-UTC session would shift hour/date buckets. Runtime-settable,
     # idempotent — pin it here so queries are correct on ANY session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = footer_schema(spark, path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):

@@ -897,6 +897,87 @@ class TestHttpFreshness:
             server.shutdown()
 
 
+def _assert_footer_read_matches_inference(spark, path):
+    """Reading ``path`` by its footer schema, as load_table does before
+    any column fix-up, gives Spark's inferred schema and the same rows."""
+    from console_etl_spark.session import footer_schema
+
+    declared = footer_schema(spark, path)
+    assert declared is not None, path
+    got = spark.read.schema(declared).parquet(path)
+    want = spark.read.parquet(path)
+    assert got.schema == want.schema, path
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr), path
+
+
+def test_load_table_schema_equals_inferred_schema(spark, tmp_path):
+    """load_table reads every fixture table, and a Spark-written
+    directory with an INT96 timestamp, by exactly the schema
+    ``spark.read.parquet`` infers. A plain Arrow mapping of the footer
+    fails the directory (it is not a file) and reads INT96 as bigint."""
+    from pyspark.sql.types import TimestampType
+
+    from console_etl_spark.session import load_table
+    from tests.conftest import SF_TEST, TABLES
+
+    for name in TABLES:
+        path = f"{SF_TEST}/{name}.parquet"
+        if name != "events":  # events.ts is normalized after the read
+            assert load_table(spark, SF_TEST, name).schema == spark.read.parquet(path).schema
+        _assert_footer_read_matches_inference(spark, path)
+
+    spark.range(3).select(
+        "id",
+        F.current_timestamp().alias("loaded_at"),  # INT96, Spark's default
+        F.array("id").alias("ids"),
+    ).repartition(2).write.parquet(str(tmp_path / "audit.parquet"))
+    df = load_table(spark, str(tmp_path), "audit")
+    assert df.schema == spark.read.parquet(str(tmp_path / "audit.parquet")).schema
+    assert isinstance(df.schema["loaded_at"].dataType, TimestampType)
+    _assert_footer_read_matches_inference(spark, str(tmp_path / "audit.parquet"))
+
+
+def test_load_table_and_query_build_launch_no_spark_job(spark):
+    """The schema comes from the footer on the driver: load_table on any
+    fixture table, and building a query over 6 (q5_region_revenue) or 4
+    (dq_violations_report) of them, leave the session's job count as it
+    was. Inferring the schema ran one Spark job per load_table call."""
+    import __spark_entry__ as entrymod
+    from console_etl_spark.session import load_table
+    from tests.conftest import SF_TEST, TABLES
+
+    qs = entrymod.queries()
+    before = _n_jobs_settled(spark)
+    for name in TABLES:
+        load_table(spark, SF_TEST, name)
+    qs["q5_region_revenue"](spark, SF_TEST)
+    qs["dq_violations_report"](spark, SF_TEST)
+    assert _n_jobs_settled(spark) == before
+
+
+def test_codegen_cache_holds_a_core_pass(spark):
+    """A second pass of the frozen core 30 reuses the classes the first
+    compiled (~440). At Spark's default cache of 100 entries the second
+    pass compiled about as many as the first. A few classes still compile
+    on a warm pass (2-20 measured): AQE numbers codegen stages in the
+    order it plans them, so a stage id, and with it the class source, can
+    differ between runs."""
+    import __spark_entry__ as entrymod
+    import bench
+    from tests.conftest import SF_TEST
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    qs = entrymod.queries()
+    compiled = []
+    for _ in range(2):
+        c0 = metrics.METRIC_COMPILATION_TIME().getCount()
+        for name in bench.CORE:
+            qs[name](spark, SF_TEST).write.format("noop").mode("overwrite").save()
+        compiled.append(metrics.METRIC_COMPILATION_TIME().getCount() - c0)
+    first, second = compiled
+    assert first > 0 and second < 0.10 * first, compiled
+
+
 def test_load_table_normalizes_all_ts_fixture_generations(spark, tmp_path):
     """The events fixture has shipped with three different parquet
     physical types for ``ts`` across driver regenerations; load_table
@@ -934,6 +1015,7 @@ def test_load_table_normalizes_all_ts_fixture_generations(spark, tmp_path):
         d = tmp_path / name
         d.mkdir()
         pq.write_table(tbl, str(d / "events.parquet"))
+        _assert_footer_read_matches_inference(spark, str(d / "events.parquet"))
         df = load_table(spark, str(d), "events")
         assert isinstance(df.schema["ts"].dataType, TimestampType), name
         got[name] = sorted(
